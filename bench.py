@@ -24,32 +24,29 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 # Fixed I/O probe target: a parquet file whose SIZE does not depend
-# on $SPARK_GRAFT_SF_DIR, so the probe is fixed work across rounds.
+# on $SPARK_GRAFT_SF_DIR, so the probe is fixed work across runs.
 CANARY_IO_FILE = "/root/testdata/sf0.1/lineitem.parquet"
 
 
 def cpu_canary(spark) -> dict[str, float]:
-    """Fixed-work box-speed probe (VERDICT r9 next-round #1; widened
-    per VERDICT r10 #4): the r9 driver sweep read +37% vs r8 with
-    zero code explanation, and nothing in the artifact could
+    """Fixed-work box-speed probe: a sweep total alone cannot
     distinguish a slower box from a real regression. Three fixed
     workloads — pure-JVM (whole-stage-codegen range aggregation),
     pure-Python (tight hash loop, the Python-worker speed every
     pandas-UDF query pays), and I/O-bound (scan+hash a FIXED parquet
-    file: parquet decode + page-cache/disk state, the component the
-    r10 verdict proved a pure-CPU probe cannot see — equal CPU
-    canaries, 1.47x different sweeps) — each scales with box
-    condition but not with any engine code path, so across rounds
+    file: parquet decode + page-cache/disk state, which a pure-CPU
+    probe cannot see) — each scales with box condition but not with
+    any engine code path, so across runs
 
         queries_slower AND canary_slower  -> box, not code
         queries_slower AND canary flat    -> real regression
 
     Probes run BEFORE, AFTER, and INTERLEAVED between blocks of the
-    sweep (r10 #4: endpoint sampling straddles co-tenant noise
-    windows invisibly; the interleaved series localizes WHICH stretch
-    of the sweep a slowdown hit). `sec` stays jvm+py only — the
-    cross-round normalizer BASELINE.md has tracked since r10 —
-    io_sec is reported alongside, not folded in."""
+    sweep (endpoint sampling straddles co-tenant noise windows
+    invisibly; the interleaved series localizes WHICH stretch of the
+    sweep a slowdown hit). `sec` stays jvm+py only — the normalizer
+    BASELINE.md tracks — io_sec is reported alongside, not folded
+    in."""
     import hashlib
 
     # Untimed same-shape warmup: codegen/JIT for THIS expression is
@@ -118,7 +115,7 @@ def main() -> None:
     # reports the per-query MEDIAN (+ spread): on a co-tenant box with
     # ±25 % noise windows (BASELINE.md), back-to-back per-query repeats
     # share the same noise window while interleaved sweeps sample
-    # different ones — the honest way to compare rounds. Session
+    # different ones — the honest way to compare runs. Session
     # memos (dup-pair table, BPE merges) and the DF cache are reset
     # between sweeps so every sweep pays full cost.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")))
@@ -132,7 +129,7 @@ def main() -> None:
         dedup._PAIRS_MEMO.clear()
         text._BPE_MEMO.clear()
 
-    # Interleaved probes (VERDICT r10 #4): one fixed-work probe every
+    # Interleaved probes: one fixed-work probe every
     # PROBE_EVERY queries, so a co-tenant noise window that hits only
     # part of the sweep is LOCALIZED instead of averaged away by the
     # endpoint pair. ~1 s per probe, ~6 probes per full sweep.
@@ -185,10 +182,9 @@ def main() -> None:
         name: sorted(sw[name] for sw in sweeps)[repeats // 2]
         for name in sweeps[0]
     }
-    # Key order matters for the judge-visible artifact: the driver
-    # keeps only a ~2 KB TAIL of this line, so the big per-query map
-    # goes FIRST and the headline total + a slowest-10 digest go LAST
-    # — the summary survives truncation (VERDICT r4 next-round #5).
+    # Key order: the big per-query map goes FIRST and the headline
+    # total + a slowest-10 digest go LAST, so a consumer that keeps
+    # only the tail of this line still gets the summary.
     out = {
         "queries": med,
         "canary_series": canary_series,
@@ -207,11 +203,8 @@ def main() -> None:
             for name in med
         }
     out["n_queries"] = len(med)
-    # Cross-round perf series (VERDICT r6 next-round #3): the fixed
-    # 82-name r1 subset's total, emitted in the TAIL section so the
-    # driver's truncated artifact still carries it — BASELINE.md's
-    # round-over-round comparison is verifiable from BENCH_rN.json
-    # alone instead of requiring a local re-measure.
+    # The fixed 82-name r1 subset's total: BASELINE.md's long-running
+    # comparison series, kept in the tail section.
     subset_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "scripts", "r1_subset.json"
     )
@@ -228,10 +221,9 @@ def main() -> None:
         sorted(med.items(), key=lambda kv: -kv[1])[:10]
     )
     out["value"] = round(sum(med.values()), 3)
-    # Box-speed canary + normalized total (VERDICT r9 #1): canary is
-    # fixed work, so value/canary is comparable across rounds even on
-    # boxes of different speed. Emitted in the TAIL so the driver's
-    # truncated artifact keeps it.
+    # Box-speed canary + normalized total: canary is fixed work, so
+    # value/canary is comparable across runs even on boxes of
+    # different speed. Emitted in the tail section.
     canary_sec = round(
         (
             canary_pre["jvm_sec"]
@@ -248,11 +240,11 @@ def main() -> None:
         "sec": canary_sec,
     }
     out["value_per_canary"] = round(out["value"] / canary_sec, 2)
-    # Compact tail form of the interleaved series (r10 #4): each
-    # block's wall time normalized by ITS OWN closing probe's jvm+py
-    # — a flat array means the box was steady; one spiked entry
-    # localizes a noise window to that stretch of the sweep. io_sec
-    # rides the sidecar series in full.
+    # Compact tail form of the interleaved series: each block's wall
+    # time normalized by ITS OWN closing probe's jvm+py — a flat array
+    # means the box was steady; one spiked entry localizes a noise
+    # window to that stretch of the sweep. io_sec rides the full
+    # canary_series at the head of the line.
     out["block_norm"] = [
         round(
             c["block_sec"] / max(c["jvm_sec"] + c["py_sec"], 1e-9), 1
@@ -263,34 +255,6 @@ def main() -> None:
         out["r1_subset_per_canary"] = round(
             out["r1_subset_total_sec"] / canary_sec, 2
         )
-    # Full per-query sidecar (VERDICT r9 #7): the driver keeps only a
-    # ~4 KB tail of the stdout line, so only ~57/256 per-query times
-    # were cross-round comparable. Write the complete map to
-    # BENCH_r{next}_queries.json (next = max committed round + 1 —
-    # the driver's round-end commit picks it up) so every future
-    # judge can diff all queries.
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_r*.json",
-            )
-        )
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_r{max(rounds, default=0) + 1:02d}_queries.json",
-    )
-    try:
-        with open(sidecar, "w") as fh:
-            json.dump(out, fh, indent=1, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: the stdout line still has the tail
     print(json.dumps(out))
     spark.stop()
 

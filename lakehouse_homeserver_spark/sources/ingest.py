@@ -34,7 +34,9 @@ surface with the reference's exact table options
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +45,34 @@ from .snapshot import SnapshotTable
 
 SRC_NS = "src"
 META_NS = "metadata"
+
+
+def _local_path(uri: str) -> str | None:
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return None
+    return os.path.realpath(unquote(parsed.path))
+
+
+def _drop_orphan_location(spark: SparkSession, table: str) -> None:
+    """Remove the default managed location of `table`, which the
+    catalog does not know. Only that exact directory goes, and only
+    when it lies under `spark.sql.warehouse.dir`.
+
+    Assumes one process per warehouse directory. The default session
+    catalog is in-memory, so a table another live process created in
+    the same warehouse looks orphaned here and would be removed."""
+    db, _, name = table.rpartition(".")
+    db_uri = spark.catalog.getDatabase(
+        db or spark.catalog.currentDatabase()
+    ).locationUri
+    db_dir = _local_path(db_uri)
+    root = _local_path(spark.conf.get("spark.sql.warehouse.dir"))
+    if db_dir is None or root is None:
+        return
+    path = os.path.join(db_dir, name.lower())
+    if os.path.commonpath([path, root]) == root and os.path.isdir(path):
+        shutil.rmtree(path)
 
 
 @dataclass
@@ -77,6 +107,10 @@ class TableFormat:
         self, df: DataFrame, table: str, properties: dict | None = None
     ) -> None:
         if not df.sparkSession.catalog.tableExists(table):
+            # A run killed between writing files and registering the
+            # table leaves its managed location behind; CREATE then
+            # fails with LOCATION_ALREADY_EXISTS on every later run.
+            _drop_orphan_location(df.sparkSession, table)
             self.create(df, table, properties=properties)
         else:
             df.write.format(self.name).mode("overwrite").saveAsTable(table)

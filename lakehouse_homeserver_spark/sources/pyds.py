@@ -281,6 +281,19 @@ class SnapshotReader(DataSourceReader):
         yield from _iter_file_batches(self._schema, partition)
 
 
+def _read_delete_keys(paths: list[str]):
+    """One Arrow table of the delete-key files at `paths`. Spark writes
+    them, so TIMESTAMP keys are INT96 and must come back at
+    microseconds to join against the data side (see
+    `_iter_file_batches`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return pa.concat_tables(
+        [pq.read_table(p, coerce_int96_timestamp_unit="us") for p in paths]
+    )
+
+
 def _iter_file_batches(
     schema: StructType, partition: SnapshotPartition, keep_ord: bool = False
 ):
@@ -304,7 +317,7 @@ def _iter_file_batches(
     del_tables = []
     pos_sets = []
     for cols, paths in partition.deletes:
-        tab = pa.concat_tables([pq.read_table(p) for p in paths])
+        tab = _read_delete_keys(paths)
         if list(cols) == ["__positional__"]:
             mine = tab.filter(
                 pa.compute.equal(tab.column("_file"), pa.scalar(base_name))
@@ -320,7 +333,12 @@ def _iter_file_batches(
         else None
     )
     want = [f.name for f in schema.fields]
-    pf = pq.ParquetFile(partition.file_path)
+    # Spark writes TIMESTAMP as INT96, which pyarrow decodes as
+    # timestamp[ns] by default; Spark's Arrow bridge only accepts
+    # microseconds, its own TIMESTAMP precision.
+    pf = pq.ParquetFile(
+        partition.file_path, coerce_int96_timestamp_unit="us"
+    )
     have = set(pf.schema_arrow.names)
     present = [c for c in want if c in have]
     off = 0
@@ -628,7 +646,6 @@ class SnapshotChangeFeedStreamReader(DataSourceStreamReader):
 
     def read(self, partition: ChangeFeedPartition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if not partition.file_path:
             return
@@ -645,7 +662,7 @@ class SnapshotChangeFeedStreamReader(DataSourceStreamReader):
                 # vectorized isin, no key columns involved.
                 import numpy as np
 
-                tab = pa.concat_tables([pq.read_table(p) for p in paths])
+                tab = _read_delete_keys(paths)
                 mine = tab.filter(
                     pa.compute.equal(
                         tab.column("_file"),
@@ -657,7 +674,7 @@ class SnapshotChangeFeedStreamReader(DataSourceStreamReader):
                 ).astype(np.int64)
             else:
                 semi_tab = (
-                    pa.concat_tables([pq.read_table(p) for p in paths])
+                    _read_delete_keys(paths)
                     .group_by(cols)
                     .aggregate([])
                 )

@@ -1,25 +1,15 @@
-"""Mechanical edited-since-verdict detection (VERDICT r7 next-round #1).
+"""Which registered queries does an edit reach? A static call graph.
 
-Problem this solves: the driver certifies ~50 queries per round
-(`registry.PRIORITY` controls the window), so most queries ride a
-verdict from an EARLIER round. A query edited after its latest
-verdict ships under a stale certificate until it is re-sampled. The
-r5–r7 deferral lists were hand-curated and r7's missed three hits
-(`a23_expectations`, `a33_expire_orphans`, `a51_ingest_lifecycle` —
-the judge's function-level diff found them). This script re-derives
-the set mechanically, the way the judge does:
+`compute_hits(base)` maps every registered query reached by package
+edits since the git revision `base` (working-tree edits included) to
+the changed defs that reach it:
 
-  1. base = the latest "round N: verdict/..." commit (everything
-     sampled in round N or earlier was certified on that tree; any
-     query REACHED by a later edit needs a fresh sample)
-  2. git diff -U0 base..worktree, package sources only, NEW-side
-     line ranges
-  3. changed defs: ast spans INCLUDING decorators (a hunk inside a
+  1. git diff -U0 base, package sources only, NEW-side line ranges;
+  2. changed defs: ast spans INCLUDING decorators (a hunk inside a
      @query(oracle=...) block belongs to the decorated function, not
-     the previous def — the exact mis-attribution the judge warned
-     about); a module-level hunk flags the defs that REFERENCE a name
-     it (re)assigns
-  4. changed defs -> queries: a static intra-package call graph —
+     the previous def); a module-level hunk flags the defs that
+     REFERENCE a name it (re)assigns;
+  3. changed defs -> queries: a static intra-package call graph —
      Name loads resolved through module symbols/from-imports, plus
      called-attribute names matched against package defs (so shared
      helpers, fixtures and kernels count as "on the result path").
@@ -29,24 +19,15 @@ the set mechanically, the way the judge does:
      without that guard every list.append reached
      SnapshotTable.append and the report flooded.
 
-`--check` exits non-zero unless every hit is covered by
-`registry.PRIORITY` (the next driver window) or `registry.DEFERRED`
-(an explicit justification-carrying deferral map). It runs as a
-pytest (tests/test_stale_verdicts.py) so window curation can never
-regress to hand-listing.
-
-`--backlog` additionally diffs each query against ITS OWN latest
-verdict round's commit — the multi-round staleness the single-base
-check can't see (it exists because rounds 1-7 curated by hand). The
-backlog is burned down oldest-first via the window's spare slots; it
-is reported, not enforced.
+A newly registered query is a hit through its own changed def. The
+slow parity gate (tests/test_parity_gate.py) samples
+`compute_hits("HEAD~1")`.
 """
 
 from __future__ import annotations
 
 import ast
 import glob
-import json
 import os
 import re
 import subprocess
@@ -56,41 +37,6 @@ from collections import defaultdict
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "lakehouse_homeserver_spark"
 sys.path.insert(0, REPO)
-
-
-# --------------------------------------------------------------------------
-# verdict history
-# --------------------------------------------------------------------------
-
-def latest_verdict_rounds() -> dict[str, int]:
-    """Max round in which each query was sampled by the driver. A
-    sampled-but-failed entry still counts as that round's sample (the
-    failure forces a re-run through the normal red-fix flow)."""
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
-        with open(path) as fh:
-            for name in json.load(fh):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def round_commits() -> dict[int, str]:
-    """The 'round N: verdict/advice/correctness/bench' commits. The
-    driver ran its sweep on that commit's parent tree; the artifact
-    commit only adds root-level JSON/MD, so it is exact for package
-    sources."""
-    out = subprocess.run(
-        ["git", "log", "--format=%H %s", "--all"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout
-    commits: dict[int, str] = {}
-    for line in out.splitlines():
-        sha, _, subject = line.partition(" ")
-        m = re.match(r"round (\d+): verdict", subject)
-        if m:
-            commits.setdefault(int(m.group(1)), sha)
-    return commits
 
 
 # --------------------------------------------------------------------------
@@ -393,133 +339,5 @@ def compute_hits(base: str) -> dict[str, list[str]]:
         trig = reachable(qdef, edges) & changed
         if trig:
             hits[name] = sorted(trig)
-    # queries with no verdict at all must be windowed regardless
-    latest = latest_verdict_rounds()
-    for name in qfns:
-        if name not in latest:
-            hits.setdefault(name, []).insert(0, "<never-sampled>")
     return hits
 
-
-def compute_backlog() -> dict[str, dict]:
-    """Per-query staleness vs its OWN latest verdict commit (slower:
-    one diff per distinct round)."""
-    from lakehouse_homeserver_spark.registry import all_queries
-
-    qfns = all_queries()
-    latest = latest_verdict_rounds()
-    commits = round_commits()
-    defs, refs, idx_of_file, terminal = build_index()
-    edges = build_edges(defs, refs, idx_of_file, terminal)
-    q2def = _query_defs(qfns, defs)
-    changed_cache: dict[int, set[str]] = {}
-    out: dict[str, dict] = {}
-    for name in qfns:
-        rnd = latest.get(name)
-        if rnd is None or rnd not in commits or name not in q2def:
-            continue
-        if rnd not in changed_cache:
-            changed_cache[rnd] = changed_defs_for(
-                commits[rnd], defs, idx_of_file, refs
-            )
-        trig = reachable(q2def[name], edges) & changed_cache[rnd]
-        if trig:
-            out[name] = {"verdict_round": rnd, "why": sorted(trig)}
-    return out
-
-
-def main() -> int:
-    check = "--check" in sys.argv
-    backlog_mode = "--backlog" in sys.argv
-    if "--age" in sys.argv:
-        # r9: the AGE pool in one command (VERDICT r8 #3's oldest-first
-        # cadence previously needed ad-hoc scripting every round):
-        # every registered query's latest verdict round, oldest tier
-        # first, never-sampled queries flagged loudest. Compose the
-        # next window as: --check hits + DEFERRED burn-down, then this
-        # list top-down.
-        from lakehouse_homeserver_spark.registry import (
-            DEFERRED,
-            PRIORITY,
-            all_queries,
-        )
-
-        latest = latest_verdict_rounds()
-        names = list(all_queries())
-        never = sorted(n for n in names if n not in latest)
-        # A never-sampled query that is ALREADY IN PRIORITY (or
-        # explicitly justified in DEFERRED — the same escape hatch
-        # --check honors, so the two gates can't contradict) is the
-        # normal mid-round state of a new registration (it will be
-        # certified by the very next driver run); only a never-sampled
-        # query MISSING from both is a gate failure (r10 review: the
-        # unconditional exit-1 made the suite red from the moment a
-        # new query was registered until the driver's artifact drop,
-        # so any intermediate CI run or bisect landed on a failing
-        # tree).
-        unwindowed = [
-            n for n in never if n not in PRIORITY and n not in DEFERRED
-        ]
-        for n in never:
-            tag = (
-                "(windowed for the next driver run)"
-                if n in PRIORITY
-                else "<-- window this FIRST"
-            )
-            print(f"NEVER-SAMPLED: {n}  {tag}")
-        tiers: dict[int, list[str]] = {}
-        for n in names:
-            if n in latest:
-                tiers.setdefault(latest[n], []).append(n)
-        for rnd in sorted(tiers):
-            qs = sorted(tiers[rnd])
-            print(f"r{rnd} ({len(qs)}): {' '.join(qs)}")
-        oldest = min(tiers) if tiers else None
-        print(
-            f"== age pool: {len(names)} registered, {len(never)} "
-            f"never-sampled ({len(unwindowed)} unwindowed), "
-            f"oldest verdict tier r{oldest} =="
-        )
-        return 1 if unwindowed else 0
-    if backlog_mode:
-        backlog = compute_backlog()
-        for name, info in sorted(
-            backlog.items(), key=lambda kv: (kv[1]["verdict_round"], kv[0])
-        ):
-            why = ", ".join(w.split("::", 1)[-1] for w in info["why"][:6])
-            print(f"r{info['verdict_round']}: {name} <- {why}")
-        print(f"== backlog: {len(backlog)} queries stale vs their own "
-              "verdict round (burn down oldest-first) ==")
-        return 0
-
-    commits = round_commits()
-    last_round = max(commits)
-    base = commits[last_round]
-    hits = compute_hits(base)
-    for name in sorted(hits):
-        why = ", ".join(w.split("::", 1)[-1] for w in hits[name][:6])
-        print(f"{name} <- {why}")
-    print(
-        f"== {len(hits)} queries reached by edits since the r{last_round} "
-        f"verdict commit {base[:8]} =="
-    )
-    if not check:
-        return 0
-    from lakehouse_homeserver_spark.registry import DEFERRED, PRIORITY
-
-    missing = sorted(set(hits) - set(PRIORITY) - set(DEFERRED))
-    if missing:
-        print(
-            "FAIL: edited-since-verdict queries missing from PRIORITY "
-            f"(and not explicitly DEFERRED): {missing}"
-        )
-        return 1
-    deferred_hit = sorted(set(hits) & set(DEFERRED))
-    if deferred_hit:
-        print(f"note: deferred-with-justification: {deferred_hit}")
-    print("OK: every edited-since-verdict query is in the driver window")
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -266,6 +266,33 @@ def test_json_landing_full_and_incremental(spark, json_landing, tmp_path):
         spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
 
 
+def test_full_load_clears_orphan_managed_location(spark, json_landing):
+    """A killed run can leave a table's managed directory in the
+    warehouse with no catalog entry. The next full load must replace
+    that orphan directory instead of failing with
+    LOCATION_ALREADY_EXISTS, and must leave its siblings alone."""
+    from urllib.parse import urlparse
+
+    landing, total, half = json_landing
+    lh = Lakehouse(spark, source_format="json")
+    spark.sql("DROP TABLE IF EXISTS src.nation")
+    db_dir = urlparse(spark.catalog.getDatabase("src").locationUri).path
+    orphan = os.path.join(db_dir, "nation")
+    sibling = os.path.join(db_dir, "nation_orphan_probe_sibling")
+    for d in (orphan, sibling):
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "part-00000.parquet"), "wb") as fh:
+            fh.write(b"left behind by a killed run")
+    try:
+        assert lh.load_full("nation", landing) == total - half
+        assert lh.table("nation").count() == total - half
+        assert os.path.exists(os.path.join(sibling, "part-00000.parquet"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS src.nation")
+        spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
+        shutil.rmtree(sibling, ignore_errors=True)
+
+
 def test_csv_landing_incremental_roundtrip(spark, sf_dir, tmp_path):
     """A5/A6 over a CSV landing zone (header + inferSchema): values
     survive the text round-trip and the unseen-file contract holds."""

@@ -143,6 +143,13 @@ def test_oracle_parity(name, spark, duck, sf_dir):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
+def test_every_registered_query_has_an_oracle():
+    """test_oracle_parity is parametrized over oracle keys, so a query
+    registered without an oracle (or an oracle without a query) would
+    otherwise go unchecked without any failure."""
+    assert set(QUERIES) == set(ORACLES)
+
+
 def test_parity_harness_catches_uncast_sum(spark, duck, sf_dir):
     """Meta-test (VERDICT r2 next-round #2 'Done' criterion): a
     deliberately-injected uncast integer SUM must FAIL the hardened

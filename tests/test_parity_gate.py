@@ -1,31 +1,30 @@
-"""Standing parity-sweep gate (VERDICT r9 next-round #3).
+"""Slow-tier parity-sweep gate: a sample of `scripts/parity_sweep.py`.
 
-The sf0.1 and adversarial-parallelism sweeps (`scripts/parity_sweep.py`)
-caught four real latent cross-engine divergences in r9 — but they were
-scripts someone had to remember to run. This gate runs a seeded,
-round-rotating SAMPLE of both axes inside the normal pytest suite, so
-the e1-collateral class (engine and oracle drifting apart where only
-the big-SF or odd-parallelism run can see it) fails CI in the round it
-happens.
+The sf0.1 and adversarial-parallelism sweeps catch cross-engine
+divergences (ROUND half-ties, sign-of-zero, decimal-cast accumulation,
+SF-calibrated bounds) that the sf0.001 oracle test structurally cannot
+see. The full sweeps are manual; this gate runs a sample of the same
+axes inside pytest (slow tier, `SPARK_GRAFT_SLOW_TESTS=1`).
 
-Sample per axis (documented in SURVEY.md round-10 note):
-  * up to 4 "newest-edited" queries — mechanically derived by
-    `scripts/stale_verdicts.py`'s call graph (queries reached by any
-    package edit since the last round's verdict commit);
-  * 8 rotating as a TRUE cycle — one FIXED md5(name)-shuffled order
-    of all oracle-backed queries, each round taking the next 8-name
-    slice (offset = 8 * round mod N, wraparound), where round = max
-    committed CORRECTNESS round + 1. A cycle, not independent
-    per-round draws (those would cover only ~63% of the registry in
-    32 rounds — coupon collector; r10 review), so every query
-    provably passes all axes within ceil(N/8) ~= 33 rounds. Registry
-    growth shifts the wheel slightly between rounds; the advancing
-    offset keeps coverage near-cyclic with no curation.
+Sample per axis:
+  * up to 4 edited queries — those reached by any package edit since
+    HEAD~1 (the last commit plus uncommitted edits), derived by the
+    static call graph in `scripts/edited_queries.py`;
+  * 8 rotating names as a TRUE cycle — one FIXED md5(name)-shuffled
+    order of all oracle-backed queries; each commit takes the next
+    8-name slice (offset = 8 * `git rev-list --count HEAD` mod N,
+    wraparound). A cycle, not independent per-commit draws (those
+    would cover only ~63% of the registry after N/8 draws — coupon
+    collector), so every query passes all axes within ceil(N/8)
+    consecutive commits.
+
+If git cannot answer (shallow clone, no git binary) the edited axis is
+dropped and the wheel starts at slice 0, with a warning.
 
 Axes:
-  * sf0.1 at the default session shape — 10x the driver gate's data;
+  * sf0.1 at the default session shape — 100x the oracle test's data;
   * sf0.01 at local[4] / 7 shuffle partitions — partition-count
-    invariance (the 1000-executor property);
+    invariance;
   * a 4-query slice under local-cluster[2,2,1024] — real executor
     JVMs (driver-JVM-sharing assumptions).
 
@@ -35,11 +34,9 @@ manual runs use — no second implementation to drift).
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import json
 import os
-import re
 import subprocess
 import sys
 
@@ -53,26 +50,25 @@ N_EDITED = 4
 N_ROTATING = 8
 
 
-def _round_number() -> int:
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
+def _commit_count() -> int:
+    out = subprocess.run(
+        ["git", "rev-list", "--count", "HEAD"],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout
+    return int(out)
 
 
 def _sample() -> list[str]:
-    # sys.path inserts are scoped to this function (ADVICE r10: a
-    # permanent SCRIPTS insert lets scripts/*.py shadow same-named
-    # modules for every test that runs after this module in-process).
+    # sys.path inserts are scoped to this function: a permanent
+    # SCRIPTS insert lets scripts/*.py shadow same-named modules for
+    # every test that runs after this module in-process.
     saved = list(sys.path)
     sys.path.insert(0, REPO)
     sys.path.insert(0, SCRIPTS)
     try:
         return _sample_inner()
     finally:
-        # full snapshot restore: stale_verdicts inserts REPO again at
+        # full snapshot restore: edited_queries inserts REPO again at
         # import time, so removing only our own two entries leaks one
         sys.path[:] = saved
 
@@ -80,22 +76,19 @@ def _sample() -> list[str]:
 def _sample_inner() -> list[str]:
     from lakehouse_homeserver_spark.registry import all_oracles
 
-    import stale_verdicts as sv
+    import edited_queries as eq
 
     oracle_backed = sorted(all_oracles())
-    edited: list[str] = []
     try:
-        commits = sv.round_commits()
-        if commits:
-            base = commits[max(commits)]
-            edited = sorted(
-                n for n in sv.compute_hits(base) if n in set(oracle_backed)
-            )[:N_EDITED]
+        edited = sorted(
+            n for n in eq.compute_hits("HEAD~1") if n in set(oracle_backed)
+        )[:N_EDITED]
+        turn = _commit_count()
     except (subprocess.CalledProcessError, OSError) as exc:
-        # Degenerate GIT state only (shallow clone, no git binary):
-        # fall back to rotation-only rather than skipping the gate.
-        # Anything else (a bug in stale_verdicts itself) must FAIL the
-        # gate, not silently drop its highest-value axis (r10 review).
+        # Degenerate GIT state only: fall back to rotation-only rather
+        # than skipping the gate. Anything else (a bug in
+        # edited_queries itself) must FAIL the gate, not silently drop
+        # its highest-value axis.
         import warnings
 
         warnings.warn(
@@ -103,20 +96,14 @@ def _sample_inner() -> list[str]:
             f"({exc!r})",
             stacklevel=2,
         )
-        edited = []
-    rnd = _round_number()
+        edited, turn = [], 0
     rest = [n for n in oracle_backed if n not in set(edited)]
-    # TRUE cycle, not independent per-round draws (r10 review #2: a
-    # fresh md5(f"r{round}:{name}") order each round is sampling WITH
-    # replacement — expected coverage after 32 rounds only ~63%, full
-    # coverage a ~180-round coupon-collector). Instead: ONE fixed
-    # hash-shuffled order, and each round takes the next 8-name slice
-    # with wraparound, so every oracle-backed query provably passes
-    # all axes within ceil(N/8) ≈ 33 rounds.
+    # ONE fixed hash-shuffled order; each commit takes the next
+    # 8-name slice with wraparound, so consecutive commits tile it.
     wheel = sorted(
         rest, key=lambda n: hashlib.md5(n.encode()).hexdigest()
     )
-    start = (N_ROTATING * rnd) % len(wheel)
+    start = (N_ROTATING * turn) % len(wheel)
     rotating = (wheel + wheel)[start : start + N_ROTATING]
     return edited + rotating
 
@@ -155,9 +142,8 @@ def sample_names() -> list[str]:
 
 @pytest.mark.slow
 def test_parity_sample_at_sf01(sample_names):
-    """Axis 1: the rotating sample must hash-match DuckDB at sf0.1 —
-    10x the driver gate's SF, where the r9 ROUND/half-tie/recall-bound
-    divergences lived."""
+    """Axis 1: the sample must hash-match DuckDB at sf0.1, where
+    ROUND half-ties and SF-calibrated recall bounds diverge."""
     summary = _run_sweep(
         sample_names,
         {"SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.1"},
@@ -167,8 +153,8 @@ def test_parity_sample_at_sf01(sample_names):
 
 @pytest.mark.slow
 def test_parity_sample_at_adversarial_parallelism(sample_names):
-    """Axis 2: same sample at local[4] / 7 shuffle partitions at the
-    driver's sf0.01 — any result that depends on partition count
+    """Axis 2: same sample at local[4] / 7 shuffle partitions at
+    sf0.01 — any result that depends on partition count
     (order-dependent float reductions) is a latent cluster bug."""
     summary = _run_sweep(
         sample_names,
@@ -183,17 +169,17 @@ def test_parity_sample_at_adversarial_parallelism(sample_names):
 
 @pytest.mark.slow
 def test_parity_sample_under_local_cluster(sample_names):
-    """Axis 3 (VERDICT r9 #5, standing form): a 4-query slice of the
-    rotating sample under local-cluster[2,2,1024] — separate Worker +
-    executor JVMs, wire shuffle, serialized closures, executor-side
-    Python workers. This is the topology where driver-JVM-sharing
-    assumptions (broadcast object identity, state-store plumbing, the
-    by-value-pickled Python data source) break; local[32] structurally
-    cannot falsify them. Four queries keep the axis inside the suite
-    budget (~2 min incl. cluster startup); the full 22-query
-    certificate lives in SCALE.md round-10. PYTHONPATH is exported so
-    executor-side Python workers can import package-level kernels
-    (task closures reference them by module path)."""
+    """Axis 3: a 4-query slice of the sample under
+    local-cluster[2,2,1024] — separate Worker + executor JVMs, wire
+    shuffle, serialized closures, executor-side Python workers. This
+    is the topology where driver-JVM-sharing assumptions (broadcast
+    object identity, state-store plumbing, the by-value-pickled
+    Python data source) break; local[32] structurally cannot falsify
+    them. Four queries keep the axis inside the suite budget (~2 min
+    incl. cluster startup); the full 22-query run is recorded in
+    SCALE.md. PYTHONPATH is exported so executor-side Python workers
+    can import package-level kernels (task closures reference them by
+    module path)."""
     summary = _run_sweep(
         sample_names[:4],
         {
@@ -209,11 +195,10 @@ def test_parity_sample_under_local_cluster(sample_names):
 
 
 def test_rotation_wheel_cycles_full_registry():
-    """VERDICT r10 #7 invariant: the advancing-slice rotation must
-    cover the ENTIRE oracle-backed registry within ceil(N/8)
-    consecutive rounds even as the registry grows — the property the
-    r10 review fixed (independent per-round draws covered only ~63%
-    in 32 rounds). Simulated directly over the real wheel order."""
+    """The advancing-slice rotation must cover the ENTIRE
+    oracle-backed registry within ceil(N/8) consecutive commits even
+    as the registry grows (independent per-commit draws would cover
+    only ~63%). Simulated directly over the real wheel order."""
     import math
 
     saved = list(sys.path)
@@ -226,14 +211,14 @@ def test_rotation_wheel_cycles_full_registry():
         sys.path[:] = saved
     wheel = sorted(names, key=lambda n: hashlib.md5(n.encode()).hexdigest())
     n = len(wheel)
-    rounds_needed = math.ceil(n / N_ROTATING)
-    base_round = 17  # arbitrary start: the property must hold anywhere
+    turns_needed = math.ceil(n / N_ROTATING)
+    base_turn = 17  # arbitrary start: the property must hold anywhere
     seen: set[str] = set()
-    for rnd in range(base_round, base_round + rounds_needed):
-        start = (N_ROTATING * rnd) % n
+    for turn in range(base_turn, base_turn + turns_needed):
+        start = (N_ROTATING * turn) % n
         seen.update((wheel + wheel)[start : start + N_ROTATING])
     # consecutive fixed-stride slices with wraparound tile the wheel
     assert seen == set(wheel), (
         f"rotation missed {len(set(wheel) - seen)} of {n} queries "
-        f"in {rounds_needed} rounds"
+        f"in {turns_needed} commits"
     )

@@ -500,3 +500,50 @@ def test_scaled_state_partitions_tracks_volume():
     assert scaled_state_partitions(
         "/root/testdata/sf0.1", rows_per_partition=1_250, hi=8
     ) == "8"
+
+
+def test_snapshot_reader_handles_spark_written_timestamps(spark, tmp_path):
+    """Spark writes TIMESTAMP columns as parquet INT96, which pyarrow
+    reads as timestamp[ns] by default — a type Spark's Arrow bridge
+    rejects (UNSUPPORTED_ARROWTYPE). The Python snapshot reader must
+    hand such columns back at microsecond precision on both of its
+    paths, the change-feed stream and the batch format("snapshot")
+    read, and read the MoR delete keys the same way: a delete keyed
+    on a TIMESTAMP column joins data against key files that Spark
+    wrote too."""
+    from lakehouse_homeserver_spark.sources.pyds import SnapshotDataSource
+    from lakehouse_homeserver_spark.sources.snapshot import SnapshotTable
+    from lakehouse_homeserver_spark.streaming.jobs import stream_cdc_aggregate
+
+    rows = [("a", 3), ("a", 4), ("a", 5), ("a", 6), ("b", 3), ("b", 4),
+            ("b", 5), ("c", 4), ("c", 5), ("c", 6)]
+    df = spark.createDataFrame(rows, "k string, v int").withColumn(
+        "ts", F.timestamp_seconds("v")
+    )
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    src.create(df.filter("v < 5"))
+    src.append(df.filter("v >= 5"))
+    src.delete_where(
+        F.col("ts") == F.timestamp_seconds(F.lit(3)),
+        mode="mor",
+        equality_on=["ts"],
+    )
+
+    view_path = str(tmp_path / "view")
+    q = stream_cdc_aggregate(
+        spark, src.path, view_path, keys=["k"], measure="v",
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(180)
+    got = {
+        (r.k, r.cnt, int(r.total))
+        for r in SnapshotTable(spark, view_path).read().collect()
+    }
+    assert got == {("a", 3, 15), ("b", 2, 9), ("c", 3, 15)}
+
+    spark.dataSource.register(SnapshotDataSource)
+    back = spark.read.format("snapshot").load(src.path)
+    assert dict(back.dtypes)["ts"] == "timestamp"
+    assert back.count() == 8
+    want = src.read().select(*back.columns)
+    assert sorted(back.collect()) == sorted(want.collect())
